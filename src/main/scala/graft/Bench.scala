@@ -939,7 +939,13 @@ object Bench {
   /** Millisecond-precision decimal — keeps the headline line compact
     * (a 10-digit double per query would overflow the driver's ~4 KB
     * stdout tail capture, which is what broke BENCH_r01/r02 parsing). */
-  private def ms(v: Double): String = f"$v%.3f"
+  private[graft] def ms(v: Double): String = dec(3)(v)
+
+  /** `nd`-decimal rendering with a '.' separator whatever the default
+    * locale — the artifacts are JSON, and a comma-decimal locale would
+    * otherwise make them unparseable. */
+  private[graft] def dec(nd: Int)(v: Double): String =
+    String.format(java.util.Locale.ROOT, s"%.${nd}f", Double.box(v))
 
   /** Headline-budget decimal: `nd` decimals with trailing zeros (and a
     * bare trailing dot) stripped — "1.20" -> "1.2", "3.00" -> "3".
@@ -947,8 +953,8 @@ object Bench {
     * headline (r12 verdict ask #1): the driver's PERF tool needs the
     * 59-row map INSIDE the 1800-char line, and at full ms precision it
     * doesn't fit. */
-  private def cs(nd: Int)(v: Double): String = {
-    val s = String.format(s"%.${nd}f", Double.box(v))
+  private[graft] def cs(nd: Int)(v: Double): String = {
+    val s = dec(nd)(v)
     if (!s.contains('.')) s
     else s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
   }
@@ -1500,8 +1506,8 @@ object Bench {
       s""""stream_ingest":${jsonMap(streamR.map { case (k, v, _) => k -> v.toString })},""" +
       s""""stream_ingest_status":${jsonMap(streamR.map { case (k, _, st) => k -> ("\"" + st + "\"") })},""" +
       isoDetail +
-      s""""wall":${jsonMap(wall.toSeq.map { case (k, v) => k -> f"$v%.1f" })},""" +
-      s""""budget_sec":$budgetSec,"elapsed_sec":${f"$elapsedSec%.1f"},""" +
+      s""""wall":${jsonMap(wall.toSeq.map { case (k, v) => k -> dec(1)(v) })},""" +
+      s""""budget_sec":$budgetSec,"elapsed_sec":${dec(1)(elapsedSec)},""" +
       s""""uncold":[${uncold.map(n => "\"" + n + "\"").mkString(",")}],""" +
       s""""contaminated":[${contaminated.map(n => "\"" + n + "\"").mkString(",")}],""" +
       s""""skipped_children":[${skippedChildren.map(n => "\"" + n + "\"").mkString(",")}],""" +
@@ -1608,13 +1614,13 @@ object Bench {
         // cap in the r13 rehearsal (level 1 missed by 5 chars)
         (if (level >= 3 || level == 0)
           s""""x10_prep_sec":${ms(x10PrepSec)},""" +
-          s""""errors":$errors,"elapsed_sec":${f"$elapsedSec%.0f"},""" +
+          s""""errors":$errors,"elapsed_sec":${dec(0)(elapsedSec)},""" +
           s""""write_rows_per_sec":${ms(writeRpsH)},"compact_sec":${ms(compactSecH)},""" +
           s""""bytes_per_sample":${ms(bytesPerSampleH)},""" +
           s""""write_rows_per_sec_labelsets":${ms(writeRpsLsH)},""" +
           s""""bytes_per_sample_labelsets":${ms(bytesPerSampleLsH)},"""
         else
-          s""""errors":$errors,"elapsed_sec":${f"$elapsedSec%.0f"},""" +
+          s""""errors":$errors,"elapsed_sec":${dec(0)(elapsedSec)},""" +
           s""""write_rows_per_sec":${ms(writeRpsH)},""") +
         (if (labelSetStatus != "ok") s""""labelsets_status":"$labelSetStatus",""" else "") +
         s""""store_status":"$storeStatus","sf":"$sfDir","detail":"$detailPath"}"""
@@ -1636,7 +1642,7 @@ object Bench {
           // guaranteed to fit (no per-row maps, no status strings)
           s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
             s""""phase":"$phase","errors":$errors,""" +
-            s""""elapsed_sec":${f"$elapsedSec%.0f"},""" +
+            s""""elapsed_sec":${dec(0)(elapsedSec)},""" +
             s""""write_rows_per_sec":${ms(writeRpsH)},""" +
             s""""sf":"$sfDir","detail":"$detailPath"}"""
         }
@@ -1732,7 +1738,7 @@ object Bench {
             isolatedSection("rate_200m", sfDir,
               maxWaitSec = remainingSec + 30,
               extraEnv = Map(
-                "SPARK_GRAFT_SECTION_DEADLINE_SEC" -> f"$deadline%.0f"))
+                "SPARK_GRAFT_SECTION_DEADLINE_SEC" -> dec(0)(deadline)))
           }
           rate200Wall = (System.nanoTime() - t0) / 1e9
           isolatedRuns :+= ("rate_200m" -> rows)

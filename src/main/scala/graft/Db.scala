@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ingest.Appender
 import graft.matchers.Matcher
-import graft.storage.{BlockMeta, BlockStore, Compaction}
+import graft.storage.{BlockMeta, BlockStore, Compaction, SeriesCatalog}
 import graft.streaming.StreamingIngest
 
 /** The top-level handle — the reference's `tsdb.Open`/`DB` surface
@@ -31,7 +31,7 @@ import graft.streaming.StreamingIngest
   * same state machine, externally clocked. Streaming ingest is
   * [[graft.streaming.StreamingIngest.ingest]] against [[store]].
   */
-final class Db private (
+final class Db private[graft] (
     val store: BlockStore,
     spark: SparkSession,
     compactionRanges: Seq[Long],
@@ -48,14 +48,17 @@ final class Db private (
     Appender.txn(store, minValidTime)
 
   /** Matcher select over a closed time range — the `Querier(mint,
-    * maxt).Select(ms…)` round trip in one call; resolution runs in the
-    * postings index, never on sample rows. */
+    * maxt).Select(ms…)` round trip in one call. Matchers never run on
+    * sample rows: they resolve against the store's series catalog on
+    * the driver (or, above its gate, in the postings index) and the
+    * scan reads only the matched series ([[BlockStore.readRange]]). */
   def query(mint: Long, maxt: Long, matchers: Matcher*): DataFrame =
     store.readRange(spark, mint, maxt, matchers: _*)
 
   /** [[query]] with each series' label map attached — the reference's
-    * `Series.Labels()` (`querier.go:50-57`); the map comes from one
-    * pivot of the postings index, not from sample rows. */
+    * `Series.Labels()` (`querier.go:50-57`); the map comes from the
+    * series catalog (or one pivot of the postings index), not from
+    * sample rows. */
   def query(mint: Long, maxt: Long, withLabels: Boolean, matchers: Matcher*): DataFrame =
     store.readRange(spark, mint, maxt, withLabels, matchers: _*)
 
@@ -105,12 +108,6 @@ final class Db private (
     passes
   }
 
-  /** Evaluate a PromQL range query over this store — the full language
-    * front-end ([[graft.query.PromQl]]) on the label-carrying read
-    * path: selector resolution still happens in the compiled plan (the
-    * store read attaches each series' label map from the postings
-    * index, one pivot). `nameLabel` defaults to `__name__`, the
-    * Prometheus convention. */
   /** The optional native-histogram channel: a samples frame
     * `(series_key, labels, t, h)` ([[graft.query.PromQl.HistType]]
     * structs — `NativeHistogram.observe`+pack or the streaming observe
@@ -122,6 +119,15 @@ final class Db private (
   def registerHistograms(frame: DataFrame): Unit =
     histChannel = Some(frame.select("series_key", "labels", "t", "h"))
 
+  /** Evaluate a PromQL range query over this store — the full language
+    * front-end ([[graft.query.PromQl]]) on the label-carrying read path.
+    * Each selector reads through [[BlockStore.readRange]]: within the
+    * store's series-catalog gate its matchers resolve on the driver,
+    * the fact scan carries the matched keys, and the selector's labels
+    * dimension is a local relation of the catalog — one fact scan per
+    * selector and no index scan. Above the gate, selectors resolve in
+    * the postings index and label dims derive from the reads.
+    * `nameLabel` defaults to `__name__`, the Prometheus convention. */
   def promql(
       query: String,
       startMs: Long,
@@ -139,9 +145,8 @@ final class Db private (
     // lookbacks/ranges/offsets behind the window AND any @-pinned
     // absolute instants — then block pruning and t pushdown apply like
     // any readRange; each SELECTOR fetches through the pushdown hook,
-    // so its matchers resolve in the postings index (never on sample
-    // rows) like every other read
-    import org.apache.spark.sql.functions.{col, lit}
+    // so its matchers never run on sample rows, like every other read
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     val (mint, maxt) =
       graft.query.PromQl.scanBoundsMs(query, startMs, endMs, lookbackMs)
     // float rows gain a typed-null h / histogram rows a null v, so the
@@ -159,13 +164,25 @@ final class Db private (
       case None => base
       case Some(hf) => mixed(base, hf.where(col("t").between(mint, maxt)))
     }
+    // one catalog for the whole query, and one resolution per matcher
+    // set: a selector's read and its labels dim see the same series even
+    // if a commit lands meanwhile. The histogram channel's series live
+    // outside the catalog, so a mixed store resolves per read and
+    // derives its dims from the reads.
+    val cat = if (histChannel.isEmpty) store.catalog(spark) else None
+    val resolved = new java.util.concurrent.ConcurrentHashMap[Seq[Matcher], Seq[String]]()
+    def keysOf(c: SeriesCatalog, ms: Seq[Matcher]): Seq[String] =
+      resolved.computeIfAbsent(ms, _ => c.select(ms))
     val params = graft.query.PromQl.Params(startMs, endMs, stepMs, lookbackMs,
       nameLabel = nameLabel,
-      // the float half keeps its postings-index pushdown; the
+      // the float half keeps the store's matcher pushdown; the
       // histogram channel filters its (corridor-sized) frame on the
       // labels map with the same matcher set
       pushdown = Some { ms =>
-        val floats = store.readRange(spark, mint, maxt, withLabels = true, ms: _*)
+        val floats = cat match {
+          case Some(c) => store.readKeys(spark, mint, maxt, c, keysOf(c, ms))
+          case None => store.readRange(spark, mint, maxt, withLabels = true, ms: _*)
+        }
         histIn(ms) match {
           case None => floats
           case Some(hf) => mixed(floats, hf)
@@ -176,7 +193,11 @@ final class Db private (
       // compiler's per-series dim broadcasts hint only when the
       // driver-side build is provably safe
       seriesEstimate = Some(store.manifest.blocks.map(_.numSeries).sum),
-      broadcastLimit = store.broadcastLimit)
+      broadcastLimit = store.broadcastLimit,
+      // selector label dims from the series catalog: the matched
+      // subset as a local relation, not a second pass over the
+      // selector's samples
+      labelsDim = cat.map(c => ms => broadcast(c.labelsFrame(spark, keysOf(c, ms)))))
     if (histChannel.nonEmpty)
       graft.query.PromQl.evalMixed(query, samples, params, ordered)
     else if (ordered) graft.query.PromQl.eval(query, samples, params)

@@ -31,9 +31,10 @@ import graft.storage.BlockStore
   * through a driver iterator, never a collect.
   *
   * `query` evaluates a PromQL expression over the store ([[Db.promql]]:
-  * scan bounded by the expression's reach, selectors resolved in the
-  * postings index). Default is an instant query at the store's max
-  * time; `--start`/`--end`/`--step` (epoch ms) select a range query.
+  * scan bounded by the expression's reach, selectors resolved against
+  * the store's series catalog). Default is an instant query at the
+  * store's max time; `--start`/`--end`/`--step` (epoch ms) select a
+  * range query.
   * Output is `dump`-style `{labels} value timestamp` lines, or the
   * HTTP API's vector/matrix JSON payload with `--json`
   * ([[graft.query.ResultJson]]). The reference's `cmd/tsdb` has no
@@ -44,13 +45,12 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = prepared(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .getOrCreate())
     try run(spark, args.toSeq)
     catch {
       case e: IllegalArgumentException =>
@@ -58,6 +58,17 @@ object Main {
         System.err.println(usage)
         sys.exit(2)
     } finally spark.stop()
+  }
+
+  /** The session every subcommand runs on, `serve` included: WARN
+    * logging and the engine's Catalyst extensions
+    * ([[graft.catalyst.GraftExtensions]] — the regex→set rewrite and
+    * `labels_hash`), installed once here rather than lazily from a
+    * request thread. */
+  private[graft] def prepared(spark: SparkSession): SparkSession = {
+    spark.sparkContext.setLogLevel("WARN")
+    graft.catalyst.GraftExtensions.install(spark)
+    spark
   }
 
   private val usage: String =

@@ -24,10 +24,12 @@ import graft.query.{PromQl, ResultJson}
   * handler threads submit Spark jobs concurrently — Spark's scheduler
   * interleaves them; the driver only ever materializes lattice-sized
   * result payloads (series × instants), the same bound every API server
-  * returns as one response body. Heavy lifting (selector resolution in
-  * the postings index, scan pruning to the expression's reach) happens
-  * in the compiled plans exactly as [[Db.promql]] documents — the
-  * server adds parsing and JSON, not execution strategy.
+  * returns as one response body. Selector resolution and scan pruning
+  * to the expression's reach happen exactly as [[Db.promql]] documents
+  * — against the store's series catalog when it is within its gate —
+  * so the server adds parsing and JSON, not execution strategy.
+  * `labels` and `label/<n>/values` without `match[]` answer from that
+  * catalog with no Spark job at all.
   *
   * Envelope: `{"status":"success","data":…}` /
   * `{"status":"error","errorType":…,"error":…}` with Prometheus's
@@ -209,7 +211,7 @@ object ApiServer {
             case Some(sel) =>
               sel.select(explode(map_keys(col("labels"))).as("ln"))
                 .distinct().orderBy("ln")
-            case None => db.labelNames().orderBy("label_name")
+            case None => db.labelNames() // sorted; a local relation under the catalog
           }
           val (rows, warns) = bounded(df, limitOf(ps))
           (rows.map(r => "\"" + ResultJson.esc(r.getString(0)) + "\"")
@@ -221,7 +223,7 @@ object ApiServer {
               sel.where(map_contains_key(col("labels"), lit(name)))
                 .select(col("labels").getItem(name).as("lv"))
                 .distinct().orderBy("lv")
-            case None => db.labelValues(name).orderBy("label_value")
+            case None => db.labelValues(name)
           }
           val (rows, warns) = bounded(df, limitOf(ps))
           (rows.map(r => "\"" + ResultJson.esc(r.getString(0)) + "\"")

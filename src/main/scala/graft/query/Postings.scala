@@ -25,6 +25,11 @@ import graft.matchers.Matcher
   * many-way unions) and #series ≪ #samples — the same trade the
   * reference makes by resolving matchers entirely in the index before
   * touching sample data.
+  *
+  * A store serves reads from this path only above its series-catalog
+  * gate ([[graft.storage.BlockStore.catalog]]): within it, the same
+  * matcher semantics run on the driver over the catalog's label maps
+  * and no index scan happens per request. Deletes always resolve here.
   */
 object Postings {
 

@@ -600,7 +600,8 @@ object PromQl {
         * through it instead of filtering the generic `labels` map —
         * e.g. `TsdbSource.select` (matchers compile onto SOURCE columns
         * and reach the parquet scan) or `BlockStore.readRange`
-        * (matchers resolve in the postings index). The returned frame
+        * (matchers resolve against the store's series catalog or its
+        * postings index). The returned frame
         * must be the canonical long format including `labels`, covering
         * at least `[start − maxLookbehindMs, end]`. Without it, a
         * selector predicate over the constructed map cannot fold
@@ -628,7 +629,16 @@ object PromQl {
       seriesEstimate: Option[Long] = None,
       /** Max series-dimension rows the compiler will HINT broadcast
         * (matches `BlockStore.Options.broadcastLimit`'s default). */
-      broadcastLimit: Long = 2000000L) {
+      broadcastLimit: Long = 2000000L,
+      /** Labels-dimension hook, the companion of [[pushdown]]: when
+        * set, a selector's per-series `(series_key, labels)` dim comes
+        * from here — e.g. [[graft.Db.promql]]'s driver-held series
+        * catalog — instead of a second pass over the selector's samples
+        * ([[seriesLabelsDim]]). The frame must hold every series the
+        * matchers select through [[pushdown]], with the maps
+        * [[seriesLabelsDim]] would derive (canonical entries), including
+        * `"{}"` with an empty map whenever every matcher matches "". */
+      labelsDim: Option[Seq[Matcher] => DataFrame] = None) {
     /** A per-series dim (one row per series) with the broadcast hint
       * applied only when the series bound says the driver-side build is
       * safe. */
@@ -1026,8 +1036,19 @@ object PromQl {
 
     // --- selectors -----------------------------------------------------
 
+    private def matchersOf(s: Selector): Seq[Matcher] =
+      s.name.map(n => Eq(p.nameLabel, n)).toSeq ++ s.matchers
+
+    /** The per-series labels dim of selector `s` whose read is `sel`:
+      * the [[Params.labelsDim]] hook when set, else derived from `sel`. */
+    private def selectorDim(s: Selector, sel: DataFrame): DataFrame =
+      p.labelsDim match {
+        case Some(f) => f(matchersOf(s))
+        case None => p.hintSeriesDim(seriesLabelsDim(sel))
+      }
+
     private def selected(s: Selector): DataFrame = {
-      val ms = s.name.map(n => Eq(p.nameLabel, n)).toSeq ++ s.matchers
+      val ms = matchersOf(s)
       require(ms.nonEmpty, "promql: empty selector matches nothing")
       val base = p.pushdown match {
         case Some(f) => f(ms)
@@ -1076,7 +1097,7 @@ object PromQl {
             .where(col("v_v").isNotNull)
             .select(col("series_key"), col("t"), col("v_v").as("v"))
       filled
-        .join(p.hintSeriesDim(seriesLabelsDim(sel)), Seq("series_key"))
+        .join(selectorDim(s, sel), Seq("series_key"))
         .select("series_key", "labels", "t", "v")
     }
 
@@ -1208,7 +1229,7 @@ object PromQl {
         src: DataFrame, rangeMs: Long, extra: Seq[Column] = Nil,
         need: Set[String] = RangeAggAll, needLag: Boolean = true,
         carryLabels: Boolean = false,
-        labelsByJoin: Boolean = false): DataFrame = {
+        labelsDim: Option[DataFrame] = None): DataFrame = {
       val x = (col("t") - col("g")).cast("double") / 1000.0 // seconds rel. instant
       // the first/last sample structs carry the lag features only when
       // the function family reads them (rate/increase/irate/…); the
@@ -1264,7 +1285,7 @@ object PromQl {
       if (k > p.rangeExplodeCapK && extra.isEmpty && !need("sx"))
         windowRangeAgg(src, rangeMs, need, needLag)
       else {
-        // labelsByJoin: a first(labels) MAP buffer cannot live in the
+        // labelsDim: a first(labels) MAP buffer cannot live in the
         // UnsafeRow hash map, so carrying labels in-aggregate forces
         // this whole aggregate — over the k×-amplified explode — into
         // a partial SortAggregate. With ArgPick the stat side is
@@ -1286,9 +1307,9 @@ object PromQl {
         // as a grouping expression it would re-run the
         // map_filter + map_entries + array_sort per k×-exploded row
         // (r12 ADVICE #2).
-        val inAggLabels = carryLabels && !labelsByJoin
+        val inAggLabels = carryLabels && labelsDim.isEmpty
         val srcLean =
-          if (carryLabels && labelsByJoin) src.drop("labels")
+          if (carryLabels && labelsDim.nonEmpty) src.drop("labels")
           else if (inAggLabels)
             src.withColumn("__le",
               graft.functions.canonicalLabelEntries(col("labels")))
@@ -1306,9 +1327,10 @@ object PromQl {
             .groupBy("series_key", "g")
             .agg(aggCols.head, aggCols.tail: _*)
         val out = out0.withColumnRenamed("g", "t")
-        if (carryLabels && labelsByJoin)
-          out.join(p.hintSeriesDim(seriesLabelsDim(src)), Seq("series_key"))
-        else out
+        labelsDim match {
+          case Some(dim) if carryLabels => out.join(dim, Seq("series_key"))
+          case _ => out
+        }
       }
     }
 
@@ -1797,11 +1819,14 @@ object PromQl {
       }
       // labels: selector sources re-attach per series at OUTPUT grain
       // (keeps the big aggregate in HashAggregate — see rangeAgg's
-      // labelsByJoin note); subquery sources carry them in-aggregate
+      // labelsDim note); subquery sources carry them in-aggregate
       // (their src is an inner evaluation a dim re-run would double)
       val agg = rangeAgg(src, rangeMs, extra,
         need = need, needLag = needLag, carryLabels = true,
-        labelsByJoin = !arg.isInstanceOf[Subquery])
+        labelsDim = arg match {
+          case RangeSel(s, _) => Some(selectorDim(s, src))
+          case _ => None
+        })
       // all-x-equal windows (duplicate timestamps) zero the variance
       // denominator — NaN, not an ANSI divide error
       val slopeDenom = col("cnt") * col("sxx") - col("sx") * col("sx")

@@ -58,9 +58,12 @@ final class BlockStore(
       * (the reference's in-memory tombstone list is single-node by
       * design; this is the distributed replacement). */
     val tombstoneSpillThreshold: Int = 10000,
-    /** Matched-series / tombstone sets are broadcast-hinted only when
-      * the manifest-derived worst case (every series matched) stays
-      * under this row count; past it the hint is dropped and AQE picks
+    /** Per-series sides are built on the driver only when the
+      * manifest-derived worst case (every series matched) stays under
+      * this row count: the [[SeriesCatalog]] reads resolve against (also
+      * capped at [[SeriesCatalog.MaxSeries]]), and the matched-series /
+      * tombstone broadcast hints. Past it the catalog is off, the hints
+      * are dropped and AQE picks
       * the join strategy from actual runtime sizes — a matcher like
       * `Re(".*")` over 10⁸ series must never force a driver-side
       * broadcast build (the reference streams postings lazily,
@@ -356,24 +359,52 @@ final class BlockStore(
     * automatic `verticalQuerier` switch (`db.go:1185-1195`) that makes
     * re-ingested/backfilled data read correctly with later-block-wins
     * semantics. Tombstoned intervals are filtered via broadcast range
-    * anti-join when any exist. */
+    * anti-join when any exist.
+    *
+    * Matchers never evaluate on sample rows (the reference's Select,
+    * `querier.go:326-396`). Within the [[catalog]] gate they resolve on
+    * the driver and the fact scan carries a literal `series_key` set
+    * (parquet stats and bucket pruning apply). Above it they resolve in
+    * the postings index and the fact side gets one semi-join, hinted
+    * broadcast only when the live blocks' series count bounds the
+    * matched set safely, otherwise planned by AQE from runtime sizes — a
+    * broad matcher over 10⁸ series must not force a driver-side build. */
   def readRange(spark: SparkSession, mint: Long, maxt: Long, matchers: Matcher*): DataFrame =
-    // matcher selection resolves ENTIRELY in the postings index — the
-    // reference's Select never evaluates matchers on sample data
-    // (`querier.go:326-396`); the fact side gets one semi-join, hinted
-    // broadcast only when the manifest's series count bounds the matched
-    // set safely (a broad matcher over 10⁸ series must not OOM the
-    // driver), otherwise AQE picks the strategy from runtime sizes
     readSelected(spark, mint, maxt) { (raw0, live) =>
       if (matchers.isEmpty) raw0
-      else {
-        val idx = postingsIndex(spark)
-        val keys = graft.query.Postings.seriesFor(
-          idx, extraSeriesFor(spark, idx, matchers), matchers)
-        val totalSeries = live.map(_.numSeries).sum // upper bound on |keys|
-        val hinted = if (totalSeries <= broadcastLimit) broadcast(keys) else keys
-        raw0.join(hinted, Seq("series_key"), "left_semi")
+      else catalog(spark) match {
+        case Some(c) => restrictTo(raw0, c.select(matchers))
+        case None =>
+          val idx = postingsIndex(spark)
+          val keys = graft.query.Postings.seriesFor(
+            idx, extraSeriesFor(spark, idx, matchers), matchers)
+          val totalSeries = live.map(_.numSeries).sum // upper bound on |keys|
+          val hinted = if (totalSeries <= broadcastLimit) broadcast(keys) else keys
+          raw0.join(hinted, Seq("series_key"), "left_semi")
       }
+    }
+
+  /** The driver-held [[SeriesCatalog]] of this store, or None when the
+    * manifest's series total (an upper bound on the catalog's size and
+    * on any matched set) is over [[broadcastLimit]] — the bound under
+    * which the read path builds per-series sides on the driver at all —
+    * or over [[SeriesCatalog.MaxSeries]], the largest store the catalog
+    * was measured on. Built once per published state and shared by
+    * every handle on the same root. */
+  def catalog(spark: SparkSession): Option[SeriesCatalog] =
+    if (manifest.blocks.map(_.numSeries).sum > math.min(broadcastLimit, SeriesCatalog.MaxSeries)) None
+    else Some(SeriesCatalog.cached(spark, this))
+
+  /** Rows of `keys` only: a literal IN list the scan can push down and
+    * bucket-prune on; a broadcast semi-join against a local relation
+    * past [[BlockStore.KeyListMax]] keys, where planning the list costs
+    * more than the scan it saves. */
+  private def restrictTo(raw: DataFrame, keys: Seq[String]): DataFrame =
+    if (keys.isEmpty) raw.where(lit(false))
+    else if (keys.size <= BlockStore.KeyListMax) raw.where(col("series_key").isin(keys: _*))
+    else {
+      import raw.sparkSession.implicits._
+      raw.join(broadcast(keys.toDF("series_key")), Seq("series_key"), "left_semi")
     }
 
   /** Point lookup — the reference's seek shape
@@ -443,35 +474,52 @@ final class BlockStore(
   /** [[readRange]] with each series' label map re-attached — the
     * reference's `Series.Labels()` (`querier.go:50-57`): storage is
     * normalized (sample rows carry only the series key; label pairs
-    * live once per series in the postings index), so consumers doing
-    * per-label grouping downstream (the PromQL `by (label)` shape) get
-    * the map back from ONE pivot of the index — `map_from_entries` over
-    * a per-series collect, joined to the read once, broadcast-gated by
-    * the manifest's series count exactly like matcher semi-joins. The
-    * label-less series `"{}"` owns no index rows and surfaces an empty
-    * map, the reference's `labels.Labels{}`. */
+    * live once per series in the postings index). A matcher read within
+    * the [[catalog]] gate takes the map from a local relation of the
+    * matched series ([[readKeys]]); a whole-store read, or any read
+    * above the gate, from ONE pivot of the index (`map_from_entries`
+    * over a per-series collect) joined to the read once. The label-less series
+    * `"{}"` owns no index rows and surfaces an empty map, the
+    * reference's `labels.Labels{}`. */
   def readRange(
       spark: SparkSession,
       mint: Long,
       maxt: Long,
       withLabels: Boolean,
-      matchers: Matcher*): DataFrame = {
-    val rows = readRange(spark, mint, maxt, matchers: _*)
-    if (!withLabels) rows
-    else {
-      val lab = postingsIndex(spark)
-        .groupBy("series_key")
-        .agg(map_from_entries(
-          collect_list(struct(col("label_name"), col("label_value")))).as("__lab"))
-      val totalSeries = manifest.blocks.map(_.numSeries).sum
-      val hinted = if (totalSeries <= broadcastLimit) broadcast(lab) else lab
-      rows.join(hinted, Seq("series_key"), "left")
-        .withColumn("labels",
-          org.apache.spark.sql.functions.coalesce(
-            col("__lab"), map().cast("map<string,string>")))
-        .drop("__lab")
+      matchers: Matcher*): DataFrame =
+    if (!withLabels) readRange(spark, mint, maxt, matchers: _*)
+    else (if (matchers.isEmpty) None else catalog(spark)) match {
+      case Some(c) => readKeys(spark, mint, maxt, c, c.select(matchers))
+      case None =>
+        // a whole-store read (or a store past the catalog gate) stays
+        // one lazy pivot of the index: no driver-side build of every
+        // series' labels when nothing is matched
+        val lab = postingsIndex(spark)
+          .groupBy("series_key")
+          .agg(map_from_entries(
+            collect_list(struct(col("label_name"), col("label_value")))).as("labels"))
+        val totalSeries = manifest.blocks.map(_.numSeries).sum
+        labelled(readRange(spark, mint, maxt, matchers: _*),
+          if (totalSeries <= broadcastLimit) broadcast(lab) else lab)
     }
-  }
+
+  /** The labelled read of exactly the series `keys`, which `c` resolved
+    * (`c.select`): the fact scan carries the keys and the labels come
+    * from a local relation of the same catalog, so both always agree. */
+  private[graft] def readKeys(
+      spark: SparkSession, mint: Long, maxt: Long,
+      c: SeriesCatalog, keys: Seq[String]): DataFrame =
+    labelled(readSelected(spark, mint, maxt)((raw0, _) => restrictTo(raw0, keys)),
+      broadcast(c.labelsFrame(spark, keys)))
+
+  /** `rows` with `lab`'s `(series_key, labels)` attached; a series
+    * without index rows (the label-less `"{}"`) gets the empty map. */
+  private def labelled(rows: DataFrame, lab: DataFrame): DataFrame =
+    rows.join(lab.withColumnRenamed("labels", "__lab"), Seq("series_key"), "left")
+      .withColumn("labels",
+        org.apache.spark.sql.functions.coalesce(
+          col("__lab"), map().cast("map<string,string>")))
+      .drop("__lab")
 
   /** The series the postings index can't know, for matches-empty
     * resolution ([[graft.query.Postings.seriesFor]]'s `extraSeries`):
@@ -586,16 +634,28 @@ final class BlockStore(
       .distinct()
 
   /** A1 over the store: distinct label names from the index alone
-    * (reference `querier.go:70-89` reads only index sections). */
-  def labelNames(spark: SparkSession): DataFrame =
-    postingsIndex(spark).select(col("label_name")).distinct().orderBy("label_name")
+    * (reference `querier.go:70-89` reads only index sections) — from
+    * the series catalog, with no Spark job, within its gate. */
+  def labelNames(spark: SparkSession): DataFrame = catalog(spark) match {
+    case Some(c) => local(spark, c.labelNames, "label_name")
+    case None =>
+      postingsIndex(spark).select(col("label_name")).distinct().orderBy("label_name")
+  }
 
   /** A2 over the store: sorted distinct values of one label, index-only
-    * (reference `querier.go:91-108`). */
-  def labelValues(spark: SparkSession, name: String): DataFrame =
-    postingsIndex(spark)
-      .where(col("label_name") === name)
-      .select(col("label_value")).distinct().orderBy("label_value")
+    * (reference `querier.go:91-108`), catalog-served like [[labelNames]]. */
+  def labelValues(spark: SparkSession, name: String): DataFrame = catalog(spark) match {
+    case Some(c) => local(spark, c.labelValues(name), "label_value")
+    case None =>
+      postingsIndex(spark)
+        .where(col("label_name") === name)
+        .select(col("label_value")).distinct().orderBy("label_value")
+  }
+
+  /** A sorted driver-side list as a one-column local relation: collecting
+    * it (or a `limit` of it) runs no Spark job. */
+  private def local(spark: SparkSession, xs: Seq[String], name: String): DataFrame =
+    spark.createDataset(xs)(org.apache.spark.sql.Encoders.STRING).toDF(name)
 
   /** Record deletion intervals for every series matching the conjunction
     * over `[mint, maxt]` (reference `DB.Delete`, `db.go:1203-1232`):
@@ -1004,6 +1064,7 @@ final class BlockStore(
   def destroy(spark: SparkSession): Unit = Manifest.withLock(root) {
     spark.sql(s"DROP TABLE IF EXISTS $tableName")
     BlockStore.syncedVersions.remove(tableName)
+    SeriesCatalog.invalidate(this)
     scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
     ()
   }
@@ -1086,4 +1147,14 @@ object BlockStore {
     * is the cross-process truth). */
   private[storage] val syncedVersions =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
+
+  /** Most series keys a catalog-resolved read inlines as an IN list;
+    * past it the keys ride a broadcast semi-join against a local
+    * relation. The IN list is pruned at the scan but costs planning
+    * time per key: on a 1M-series store (4 local cores, a 10 min read)
+    * it read 128 / 512 / 1024 / 2048 / 4096 / 10240 / 102400 keys in
+    * 0.75 / 0.99 / 1.8 / 2.1 / 2.5 / 4.5 / 34 s, the semi-join in
+    * 2.0 / 1.7 / 1.9 / 1.8 / 1.7 / 1.8 / 2.6 s: they cross between 1k
+    * and 2k keys. */
+  private val KeyListMax = 1024
 }

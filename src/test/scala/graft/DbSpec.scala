@@ -289,4 +289,36 @@ class DbSpec extends SparkSuite {
     val heq = db.promql("histogram_count(mh == mh)", 2 * M, 2 * M, M)
     assert(heq.select("v").as[Double].head() == 3.0)
   }
+
+  test("promql on a small store runs one fact scan: selectors resolve against the " +
+    "series catalog, label dims are local relations") {
+    val root = Files.createTempDirectory("graft-db-onescan").toString
+    val opts = Db.Options(blockRangeMs = 3600000L)
+    val db = Db.open(spark, root, opts)
+    val M = 60000L
+    val series = for (j <- Seq("j1", "j2"); z <- Seq("a", "b", "c"))
+      yield Map("__name__" -> "m", "job" -> j, "zone" -> z)
+    db.appender(0L).add(batch((for {
+      (ls, i) <- series.zipWithIndex
+      k <- 0 to 20
+    } yield (model.Labels.fromMap(ls).canonical, k * M, k * (i + 1.0), k * 10L + i, ls)): _*))
+      .commit()
+    val q = "sum by (job) (rate(m{zone=~\"a|b\"}[5m]))"
+    val df = db.promql(q, 10 * M, 20 * M, M)
+    val plan = df.queryExecution.executedPlan.toString
+    assert("FileScan".r.findAllIn(plan).size == 1 && plan.contains("graft_store_"),
+      plan.take(4000))
+    // per job: zones a and b, slopes (i + 1)/60 per second
+    val got = df.select(col("labels").getItem("job"), col("v")).as[(String, Double)]
+      .collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    assert(got.keySet == Set("j1", "j2"))
+    assert(got("j1").forall(v => math.abs(v - 3.0 / 60) < 1e-9), got)
+    assert(got("j2").forall(v => math.abs(v - 9.0 / 60) < 1e-9), got)
+    // the postings-index path answers the same
+    val rel = new Db(new storage.BlockStore(root, opts.blockRangeMs, broadcastLimit = 0L),
+      spark, Nil, 0L, 0L)
+    def rows(d: DataFrame) = d.select("series_key", "t", "v").as[(String, Long, Double)]
+      .collect().toSet
+    assert(rows(df) == rows(rel.promql(q, 10 * M, 20 * M, M)))
+  }
 }

@@ -112,6 +112,19 @@ class MainSpec extends SparkSuite {
     }
   }
 
+  test("the session Main runs every command on, serve included, carries the " +
+    "regex-to-set rewrite") {
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraOptimizations.contains(catalyst.RegexSetRewrite))
+    assert(Main.prepared(fresh) eq fresh)
+    assert(fresh.experimental.extraOptimizations.contains(catalyst.RegexSetRewrite))
+    // and the served path's plans on that session use it
+    val f = fresh.range(3).selectExpr("cast(id as string) as v")
+      .where("v rlike '^(?:1|2)$'")
+    val plan = f.queryExecution.optimizedPlan.toString
+    assert(plan.contains(" IN (") && !plan.contains("RLIKE"), plan)
+  }
+
   test("unknown command fails with usage") {
     intercept[IllegalArgumentException] { Main.run(spark, Seq("nope")) }
   }

@@ -110,6 +110,34 @@ class ApiServerSpec extends SparkSuite
     assert(scoped == """{"status":"success","data":["1"]}""")
   }
 
+  test("labels and label values without match[] answer from the series catalog, " +
+    "with no Spark job") {
+    get("/api/v1/labels") // the catalog builds once per published state
+    val marker = "api-no-job-marker"
+    val others = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else others.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(get("/api/v1/labels")._2 == """{"status":"success","data":["inst","job"]}""")
+      assert(get("/api/v1/label/inst/values")._2 ==
+        """{"status":"success","data":["1","2"]}""")
+      assert(get("/api/v1/label/job/values?limit=1")._2 ==
+        """{"status":"success","data":["a"],"warnings":["results truncated due to limit"]}""")
+      // listener events arrive in order: once this job's start is seen,
+      // any job the requests started has been counted
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(others.get == 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("series returns the matching label sets; no match[] is an error") {
     val (code, body) = get(s"/api/v1/series?match[]=${enc("{inst=\"1\"}")}")
     assert(code == 200)

@@ -781,12 +781,18 @@ class BlockStoreSpec extends SparkSuite {
   }
 
   test("matched-series broadcast is gated on manifest series count (index/postings.go:297-368)") {
-    // small store (default gate): the semi-join is broadcast-hinted
+    // small store (default gate): matchers resolve on the driver against
+    // the series catalog — no postings-index scan, and the fact scan
+    // carries the matched keys as a literal IN set
     val store = freshStore()
     store.write(samples)
     val narrow = store.readRange(spark, T0, T0 + 40 * DAY, graft.matchers.Eq("name", "click"))
-    assert(narrow.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
-      narrow.queryExecution.optimizedPlan.toString.take(2000))
+    val narrowPlan = narrow.queryExecution.optimizedPlan.toString
+    assert("Relation ".r.findAllIn(narrowPlan).size == 1 &&
+      narrowPlan.contains(s"Relation spark_catalog.default.${store.tableName}["),
+      narrowPlan.take(2000))
+    assert("series_key#\\d+ INSET".r.findFirstIn(narrowPlan).nonEmpty, narrowPlan.take(2000))
+    assert(!narrowPlan.contains("Join"), narrowPlan.take(2000))
     // a store whose manifest says the worst case can't be broadcast:
     // no hint — a broad matcher (Re ".*" selects every series) must not
     // force a driver-side build; AQE decides from runtime sizes
